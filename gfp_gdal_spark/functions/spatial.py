@@ -17,12 +17,11 @@ derived ONLY from (phash, w, h):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gfp_gdal_spark.kernels import cells as _cells
+from gfp_gdal_spark.session import jvm_cached
 
 _U32 = 4294967295  # 0xFFFFFFFF
 _P32 = 4294967296.0  # 2^32
@@ -56,13 +55,17 @@ def footprint_ring_col(lon_c: Column, lat_c: Column, dlon: Column, dlat: Column)
     )
 
 
+@jvm_cached
+def _footprint_exprs(phash: str, w: str, h: str) -> tuple[tuple[tuple[str, Column], ...], Column]:
+    cols = footprint_cols(F.col(phash), F.col(w), F.col(h))
+    ring = footprint_ring_col(F.col("lon_c"), F.col("lat_c"), F.col("dlon"), F.col("dlat"))
+    return tuple(cols.items()), ring
+
+
 def with_footprint(df: DataFrame, phash="phash", w="w", h="h") -> DataFrame:
     """images table -> + lon_c/lat_c/dlon/dlat/ring columns."""
-    c = footprint_cols(F.col(phash), F.col(w), F.col(h))
-    df = df.withColumns(c)
-    return df.withColumn(
-        "ring", footprint_ring_col(F.col("lon_c"), F.col("lat_c"), F.col("dlon"), F.col("dlat"))
-    )
+    cols, ring = _footprint_exprs(phash, w, h)
+    return df.withColumns(dict(cols)).withColumn("ring", ring)
 
 
 # ---------------------------------------------------------------------------
@@ -281,16 +284,6 @@ def s2_cell(lon: Column, lat: Column, level: int) -> Column:
     else:
         hilbert = F.lit(0).cast("long")
     return face * F.lit(1 << (2 * level)) + hilbert
-
-
-def s2_cell_pd(lon: Column, lat: Column, level: int) -> Column:
-    """numpy-kernel twin of s2_cell (pandas UDF) — kept as the parity
-    reference for tests."""
-    @F.pandas_udf(T.LongType())
-    def _enc(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(_cells.s2_encode(lo.to_numpy(), la.to_numpy(), level))
-
-    return _enc(lon, lat)
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ pure function DataFrame -> DataFrame plus a bucketed runner.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gfp_gdal_spark.functions.spatial import hex_cell, s2_cell, with_footprint
@@ -23,6 +23,7 @@ from gfp_gdal_spark.functions.worker_tuning import tune_worker
 from gfp_gdal_spark.kernels import codec as _codec
 from gfp_gdal_spark.operators import joins as J
 from gfp_gdal_spark.plans import lineage as L
+from gfp_gdal_spark.session import jvm_cached
 
 __all__ = ["decode_and_hash", "north_star_pipeline", "run_north_star_resumable"]
 
@@ -76,6 +77,14 @@ def decode_and_hash(images: DataFrame) -> DataFrame:
     return images.mapInPandas(op, _DEC_SCHEMA)
 
 
+@jvm_cached
+def _cell_exprs(lon: str, lat: str, hex_res: int, s2_level: int) -> tuple[tuple[str, Column], ...]:
+    return (
+        ("hex_cell", hex_cell(F.col(lon), F.col(lat), hex_res)),
+        ("s2_cell", s2_cell(F.col(lon), F.col(lat), s2_level)),
+    )
+
+
 def north_star_pipeline(
     images: DataFrame,
     vector_layer: DataFrame,
@@ -89,9 +98,7 @@ def north_star_pipeline(
     hex/s2 cell ids -> PiP join vs the layer -> tile assignment.
     Returns one row per (image inside polygon) with tile/cell keys."""
     dec = decode_and_hash(images)
-    pts = with_footprint(dec)
-    pts = pts.withColumn("hex_cell", hex_cell(F.col("lon_c"), F.col("lat_c"), hex_res))
-    pts = pts.withColumn("s2_cell", s2_cell(F.col("lon_c"), F.col("lat_c"), s2_level))
+    pts = with_footprint(dec).withColumns(dict(_cell_exprs("lon_c", "lat_c", hex_res, s2_level)))
     pts = pts.select(
         "image_id", "caption", "phash", "ahash", "psnr_ok",
         "lon_c", "lat_c", "hex_cell", "s2_cell",

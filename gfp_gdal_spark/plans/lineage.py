@@ -16,10 +16,10 @@ This is the engine's analog of OGRWriter's transactional batch commits
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,7 +78,17 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence check through the Hadoop FileSystem of ``path`` (any
+    scheme Spark can read) — a few py4j calls, no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> list[int]:
+    if not _path_exists(spark, manifest_path):
+        # first run: nothing committed, so no job to collect an empty frame
+        return list(range(n_buckets))
     done = {r.bucket for r in read_manifest(spark, manifest_path).select("bucket").collect()}
     return [b for b in range(n_buckets) if b not in done]
 
@@ -139,17 +149,18 @@ def run_bucketed(
             ]
             sizes[b] = (sum(os.path.getsize(f) for f in fs), len(fs))
         rows_map = {r.bucket: r.rows for r in stats}
-        manifest_rows = [
-            (
-                int(b),
-                int(rows_map.get(b, 0)),
-                int(sizes.get(b, (0, 0))[0]),
-                int(sizes.get(b, (0, 0))[1]),
-                float(wall / len(group)),
-                time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            )
-            for b in group
-        ]
+        # a pandas frame goes to the JVM as Arrow batches; a Python list
+        # would need a Python worker to deserialize the rows
+        manifest_rows = pd.DataFrame(
+            {
+                "bucket": pd.Series(group, dtype="int64"),
+                "rows": pd.Series([rows_map.get(b, 0) for b in group], dtype="int64"),
+                "bytes": pd.Series([sizes[b][0] for b in group], dtype="int64"),
+                "n_files": pd.Series([sizes[b][1] for b in group], dtype="int64"),
+                "wall_sec": float(wall / len(group)),
+                "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            }
+        )
         spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
             manifest_path
         )

@@ -8,8 +8,10 @@ parallelism instead of the stock 200.
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -19,6 +21,17 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Build (or fetch) the local session with the engine's defaults.
+
+    Trade: ``spark.python.sql.dataFrameDebugging.enabled`` is off.
+    With it on, PySpark wraps every DataFrame/Column API call to record
+    the Python call site, which costs several extra py4j round trips per
+    call (a north_star_pipeline build: ~6,000 round trips with it,
+    ~2,300 without). The price is that analysis errors lose the Python
+    file:line "DataFrame context"; the error class, message and plan
+    are unchanged. Pass ``extra_conf`` to turn it back on while
+    debugging.
+    """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -52,9 +65,39 @@ def get_spark(
         # (splitmix64-style) staying an expression, not an error.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, str(v))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jvm_cached(build):
+    """Memoize a function that builds Columns, per live py4j gateway.
+
+    Each Column node costs at least one py4j round trip to build, so a
+    spatial expression tree rebuilt on every call costs hundreds of
+    them. A Column is an unresolved expression tree, resolved anew by
+    every plan that uses it, so one built tree can serve every call.
+    ``build`` takes only plain hashable values (column names, zoom
+    levels), never a Column, and returns Columns or tuples of them, so
+    no caller can change what the next one gets. The memo is dropped
+    when the gateway changes, so a restarted JVM never gets a JavaObject
+    of a dead one. Two threads racing on a key only build it twice.
+    """
+    memo: dict = {}
+    owner = [None]
+
+    @functools.wraps(build)
+    def cached(*key):
+        gateway = SparkContext._gateway
+        if gateway is not owner[0]:
+            memo.clear()
+            owner[0] = gateway
+        if key not in memo:
+            memo[key] = build(*key)
+        return memo[key]
+
+    return cached

@@ -60,6 +60,23 @@ def test_segments_csv_grouping(spark, tmp_path):
     assert out == {"b0": 10, "b1": 10, "b2": 10}
 
 
+def test_pending_buckets_absent_manifest_runs_no_job(spark, tmp_path):
+    """A first run (no manifest yet) learns that every bucket is pending
+    without a Spark job; an existing manifest is read by one."""
+    sc = spark.sparkContext
+    absent, present = str(tmp_path / "absent"), str(tmp_path / "manifest")
+    spark.createDataFrame([(1, 10, 100, 1, 0.5, "t")], L.MANIFEST_SCHEMA).write.parquet(present)
+    try:
+        sc.setJobGroup("pending_absent", "pending_buckets without a manifest")
+        assert L.pending_buckets(spark, absent, 4) == [0, 1, 2, 3]
+        sc.setJobGroup("pending_present", "pending_buckets with a manifest")
+        assert L.pending_buckets(spark, present, 4) == [0, 2, 3]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("pending_absent")) == []
+    assert len(sc.statusTracker().getJobIdsForGroup("pending_present")) > 0
+
+
 def test_lineage_kill_resume(spark, tmp_path):
     """north_rule: a killed job resumes without recomputing finished
     buckets, and the final output equals an uninterrupted run."""
@@ -82,6 +99,8 @@ def test_lineage_kill_resume(spark, tmp_path):
     # manifest has full lineage metrics
     m = L.read_manifest(spark, man).toPandas()
     assert len(m) == 8 and (m["rows"] > 0).all() and (m["bytes"] > 0).all()
+    per_bucket = {r.bucket: r["count"] for r in final.groupBy("bucket").count().collect()}
+    assert dict(zip(m["bucket"], m["rows"])) == per_bucket
 
     # idempotent: running again does nothing
     res2 = L.run_bucketed(spark, df, out, man, "id", n_buckets=8)

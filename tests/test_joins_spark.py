@@ -50,6 +50,17 @@ def test_pip_join_matches_brute_force(spark, points, brute_lonlat, broadcast):
     assert got_pairs == brute_pip_pairs(lon, lat, datagen.vector_layer_pandas(N_POLY))
 
 
+def test_pip_join_rejects_reserved_pr_column(spark, points):
+    """The refine reads pip_join's helper column "_pr" by name; a user
+    column of that name on either side fails loud instead of being
+    overwritten (polygon side) or made ambiguous (point side)."""
+    vl = datagen.vector_layer(spark, N_POLY)
+    with pytest.raises(ValueError, match="'_pr'.*points side"):
+        J.pip_join(points.withColumn("_pr", F.lit(1)), vl, z=4)
+    with pytest.raises(ValueError, match="'_pr'.*polys side"):
+        J.pip_join(points, vl.withColumn("_pr", F.lit(1)), z=4)
+
+
 @pytest.mark.parametrize("broadcast", [True, False])
 def test_pip_join_hex_bucket_matches_brute_force(spark, points, brute_lonlat, broadcast):
     """Hex bucketing (H3-style). Zone-scale polygons: hex cover cost is

@@ -1,12 +1,20 @@
 """End-to-end north_star pipeline: correctness vs brute force, PSNR
-invariant, caption preservation, kill/resume at pipeline level."""
+invariant, caption preservation, kill/resume at pipeline level, and the
+driver's py4j cost of building it."""
+
+import collections
 
 import numpy as np
+import py4j.clientserver
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from gfp_gdal_spark import pipelines as P
+from gfp_gdal_spark.functions.spatial import with_footprint
 from gfp_gdal_spark.kernels import geom as G
+from gfp_gdal_spark.operators import joins as J
+from gfp_gdal_spark.session import jvm_cached
 from gfp_gdal_spark.sources import datagen
 
 N = 800
@@ -71,3 +79,55 @@ def test_pipeline_kill_resume(spark, images_path, layer, tmp_path):
     a = set(map(tuple, final.select("image_id", "polygon_id").toPandas().values))
     b = set(map(tuple, single.select("image_id", "polygon_id").toPandas().values))
     assert a == b  # resumed result == uninterrupted result
+
+
+def test_warm_pipeline_build_py4j_round_trips(spark, images_path, layer, monkeypatch):
+    """A warm north_star_pipeline build reuses its cached expression
+    trees: a few hundred py4j round trips, not one per Column node
+    (~6,000 when every call rebuilt them and recorded its call site)."""
+    def build():
+        return P.north_star_pipeline(spark.read.parquet(images_path), layer, pip_z=6)
+
+    build()  # warm: each expression tree is built once per JVM
+    calls = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert 0 < calls[0] <= 1000
+
+
+def test_reused_expressions_resolve_per_branch(spark, images_path, layer):
+    """Two warm pip_join builds share every cached Column, lambda
+    variables included; a union of them must resolve each branch on its
+    own and return every row of one build exactly twice."""
+    pts = with_footprint(spark.read.parquet(images_path)).select("image_id", "lon_c", "lat_c")
+    J.pip_join(pts, layer, z=6)  # warm
+    a = J.pip_join(pts, layer, z=6)
+    b = J.pip_join(pts, layer, z=6)
+    one = [tuple(r) for r in a.collect()]
+    assert one and len(set(one)) == len(one)
+    both = collections.Counter(tuple(r) for r in a.unionByName(b).collect())
+    assert both == {r: 2 for r in one}
+
+
+def test_jvm_cached_drops_memo_on_new_gateway(monkeypatch):
+    """A memoized build function runs again after the py4j gateway
+    changes, so a restarted JVM never receives an object of the old one."""
+    built = []
+
+    @jvm_cached
+    def build(name):
+        built.append(name)
+        return len(built)
+
+    assert build("a") == build("a") == 1
+    assert build("b") == 2
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert build("a") == 3
+    assert build("a") == 3

@@ -7,6 +7,7 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -50,7 +51,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from gfp_gdal_spark.session import get_spark
 
-    spark = get_spark(cores=16)
+    spark = get_spark(cores=len(os.sched_getaffinity(0)))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
