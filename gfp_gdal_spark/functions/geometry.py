@@ -228,35 +228,6 @@ def linestring_wkt(points: Column) -> Column:
     )
 
 
-def pip_refine(px: Column, py: Column, ring: Column, holes: Column | None = None) -> Column:
-    """Exact point-in-polygon (ray cast, holes honored) — the refine
-    stage of pip_join after the cell-bucket equi-join."""
-    if holes is None:
-        @F.pandas_udf(T.BooleanType())
-        def _f(x: pd.Series, y: pd.Series, r: pd.Series) -> pd.Series:
-            flat, off = _ragged(r)
-            return pd.Series(
-                _g.points_in_rings_pairwise(x.to_numpy(float), y.to_numpy(float), flat, off)
-            )
-
-        return _f(px, py, ring)
-
-    import json
-
-    @F.pandas_udf(T.BooleanType())
-    def _fh(x: pd.Series, y: pd.Series, r: pd.Series, hs: pd.Series) -> pd.Series:
-        flat, off = _ragged(r)
-        holes_rows = [None if h is None else json.loads(h) for h in hs]
-        return pd.Series(
-            _g.point_in_polygon_pairwise(
-                x.to_numpy(float), y.to_numpy(float), flat, off, holes_rows
-            )
-        )
-
-    # holes cross the Arrow boundary as JSON (see ring_wkt note)
-    return _fh(px, py, ring, F.to_json(holes))
-
-
 def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
     """Haversine meters as a pure Column expression (JVM-side)."""
     r = 6371008.8

@@ -148,7 +148,7 @@ def ring_bbox(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# point-in-polygon (ray cast), the pip_join refine kernel
+# point-in-polygon (ray cast): numpy references for pip_join's refine
 # ---------------------------------------------------------------------------
 
 def points_in_rings_pairwise(
@@ -156,11 +156,13 @@ def points_in_rings_pairwise(
 ) -> np.ndarray:
     """Row-pairwise ray cast: point i vs ring i -> bool[n_rings].
 
-    Fully vectorized across the batch (one segment-mask pass +
-    ``np.add.reduceat`` parity per ring). Rings with <3 vertices are
-    treated as containing nothing (mirrors the degenerate-geometry
-    guard, geos_nodes.cpp:144-148). Boundary points follow the
-    standard half-open ray-cast rule.
+    The numpy reference that pip_join's JVM refine
+    (``functions.spatial.pip_refine_rect_col``) is checked against: the
+    same half-open ray cast and float64 formula. Fully vectorized across
+    the batch (one segment-mask pass + ``np.add.reduceat`` parity per
+    ring). Rings with <3 vertices are treated as containing nothing
+    (mirrors the degenerate-geometry guard, geos_nodes.cpp:144-148).
+    Boundary points follow the standard half-open ray-cast rule.
     """
     n = len(offsets) - 1
     out = np.zeros(n, dtype=bool)
@@ -221,9 +223,9 @@ def points_in_polygons_indexed(
     hole_poly: np.ndarray | None = None,
 ) -> np.ndarray:
     """Pairwise PiP where row i tests point i against polygon
-    ``poly_idx[i]`` of a SHARED ragged polygon table — the broadcast
-    refine kernel: the polygon geometry crosses the JVM->Python
-    boundary once per worker (broadcast), not once per candidate row.
+    ``poly_idx[i]`` of a SHARED ragged polygon table — each polygon is
+    stored once however many candidate rows test it. A numpy reference
+    for pip_join's results (perfbench checks the join output with it).
 
     hole_flat/hole_offsets hold ALL hole rings of the table;
     hole_poly[j] = polygon index owning hole ring j. Fully vectorized
@@ -295,8 +297,13 @@ def _ring_self_intersects(pts: np.ndarray) -> bool:
     n = pts.shape[0]
     if n < 4:
         return False
-    a = pts
-    b = np.roll(pts, -1, axis=0)
+    # scale by an exact power of two so every |coordinate| < 1: the cross
+    # products below then stay finite for huge coordinates (1e155 squared
+    # overflows to inf, and inf/inf is NaN — a verdict silently flipped to
+    # "simple"), while t and u, ratios of equally scaled terms, are
+    # bit-identical to the unscaled ones.
+    a = np.ldexp(pts, -np.frexp(np.abs(pts).max())[1])
+    b = np.roll(a, -1, axis=0)
     i, j = np.triu_indices(n, k=2)
     adj = (i == 0) & (j == n - 1)  # first and last segment are adjacent (wrap)
     i, j = i[~adj], j[~adj]
@@ -308,7 +315,7 @@ def _ring_self_intersects(pts: np.ndarray) -> bool:
     qp = q - p
     t_num = qp[:, 0] * s[:, 1] - qp[:, 1] * s[:, 0]
     u_num = qp[:, 0] * r[:, 1] - qp[:, 1] * r[:, 0]
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):  # over: huge-coordinate cross terms overflow to inf, masked by the straddle gate (VERDICT r5 #7)
+    with np.errstate(divide="ignore", invalid="ignore"):  # rxs == 0 for parallel segments
         t = t_num / rxs
         u = u_num / rxs
     proper = (rxs != 0) & (t > 0) & (t < 1) & (u > 0) & (u < 1)
@@ -478,18 +485,6 @@ def buffer_bbox_rings(flat: np.ndarray, offsets: np.ndarray, offset: float):
         np.concatenate(out_rings, axis=0) if new_off[-1] else np.empty((0, 2), np.float64)
     )
     return new_flat, new_off, ok
-
-
-def _is_convex_ccw(pts: np.ndarray) -> bool:
-    """All turns left (cross >= 0, at least one > 0) for an unclosed ring."""
-    n = pts.shape[0]
-    if n < 3:
-        return False
-    a = pts[:, :2]
-    b = np.roll(a, -1, axis=0)
-    c = np.roll(a, -2, axis=0)
-    cr = (b[:, 0] - a[:, 0]) * (c[:, 1] - b[:, 1]) - (b[:, 1] - a[:, 1]) * (c[:, 0] - b[:, 0])
-    return bool((cr > -1e-30).all() and (cr > 0).any())
 
 
 def buffer_convex_rings(

@@ -70,6 +70,19 @@ def test_validity():
     assert G.rings_valid(flat, off).tolist() == [True, False, False]
 
 
+@pytest.mark.parametrize("scale", [1e155, 1e300])
+def test_validity_huge_coordinates(scale):
+    """Huge but finite coordinates must not flip a verdict: the bow-tie's
+    cross products overflow unless the kernel rescales the ring."""
+    bowtie = np.asarray(BOWTIE) * scale
+    square = np.asarray(SQUARE) * scale
+    off = np.array([0, 4])
+    assert G._ring_self_intersects(bowtie)
+    assert G.rings_valid(bowtie, off).tolist() == [False]
+    assert not G._ring_self_intersects(square)
+    assert G.rings_valid(square, off).tolist() == [True]
+
+
 def test_simplify_passthrough_and_reduction():
     noisy = [[0.0, 0.0], [1.0, 0.001], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]]
     degenerate = [[0.0, 0.0], [1.0, 0.0]]

@@ -101,6 +101,7 @@ def test_knn_ring_parity_fuzz(spark, it):
         (5, dict(z=6, broadcast=True)),          # high-latitude band north
         (6, dict(bucket="hex", res=4, broadcast=True)),  # high-lat, hex
         (7, dict(bucket="s2", res=8, broadcast=True)),   # high-lat south, s2
+        (8, dict(z="auto", broadcast=True)),
     ],
 )
 def test_pip_join_parity_fuzz(spark, it, variant):
@@ -127,6 +128,12 @@ def test_pip_join_parity_fuzz(spark, it, variant):
         holes_list.append(hole)
     plon = lon0 + rng.uniform(-10, 10, npts)
     plat = np.clip(lat0 + rng.uniform(-8, 8, npts), -85, 85)
+    # hostile points, after the clip so every variant sees them: NaN, +-inf
+    # and +-1e300 in each coordinate (the reference puts them in no polygon)
+    bad = [np.nan, np.inf, -np.inf, 1e300, -1e300]
+    plon = np.concatenate([plon, bad, np.full(len(bad), lon0), [np.nan]])
+    plat = np.concatenate([plat, np.full(len(bad), lat0), bad, [np.nan]])
+    npts = len(plon)
     pts = spark.createDataFrame(
         pd.DataFrame({"point_id": range(npts), "lon_c": plon, "lat_c": plat})
     )

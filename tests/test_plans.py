@@ -84,7 +84,7 @@ def test_pip_join_bbox_prefilter_in_plan(spark, images_path):
 
 
 def test_pip_join_default_is_pure_jvm(spark, images_path):
-    """The default pip_join (JVM ray-cast refine) must contain ZERO
+    """pip_join (JVM ray-cast refine) must contain ZERO
     Python nodes — tile and hex bucketing both. This is the 8->32-core
     scaling fix: the Python worker path was the non-scaling component."""
     pts = with_footprint(spark.read.parquet(images_path)).select("image_id", "lon_c", "lat_c")
@@ -96,11 +96,12 @@ def test_pip_join_default_is_pure_jvm(spark, images_path):
             assert marker not in plan, f"pip_join({kwargs}) leaked into Python: {marker}"
 
 
-def test_pip_join_arrow_refine_still_available(spark, images_path):
-    pts = with_footprint(spark.read.parquet(images_path)).select("image_id", "lon_c", "lat_c")
-    polys = datagen.vector_layer_zones(spark, 200)
-    plan = plan_of(J.pip_join(pts, polys, z=6, broadcast=True, refine="arrow"))
-    assert "_bx0" in plan and "_bx1" in plan  # prefilter ahead of the Arrow boundary
+def test_pip_join_auto_level_picks(spark):
+    """The auto bucket level for each scheme, pinned on a fixed zones
+    layer (mean bbox ~1.97 degrees): tile z 8, hex res 1, S2 level 6."""
+    polys = datagen.vector_layer_zones(spark, 150)
+    picks = {b: J._auto_level(polys, "ring", b) for b in ("tile", "hex", "s2")}
+    assert picks == {"tile": 8, "hex": 1, "s2": 6}
 
 
 def test_knn_join_plan_is_pure_jvm(spark):
